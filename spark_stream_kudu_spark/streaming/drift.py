@@ -3,8 +3,8 @@ and ``q127_ks_drift``.
 
 The batch PSI reduces the event stream to a (event_type, period, bin)
 count grid before any float math; those counts are additive, so the
-operator lifts directly onto the incremental-rollup pattern
-(streaming/extensions.py's AdditiveRollupSink): each micro-batch
+operator lifts directly onto the incremental-rollup pattern (an
+``UpsertParquetSink`` with a sum ``combine``): each micro-batch
 aggregates to count partials, the sink SUM-merges them into the keyed
 store, and PSI finalizes at read time over the tiny stored grid with
 the *same* finalize code the batch query uses (operators/drift.py
@@ -40,7 +40,14 @@ from spark_stream_kudu_spark.operators.series import _HOLT_ORACLE
 from spark_stream_kudu_spark.registry import register
 from spark_stream_kudu_spark.session import tune_session
 from spark_stream_kudu_spark.sources.tables import load_table
-from spark_stream_kudu_spark.streaming.workdir import new_run_dir, stage_mod_slices
+from spark_stream_kudu_spark.streaming.sinks import UpsertParquetSink
+from spark_stream_kudu_spark.streaming.workdir import (
+    drain_foreach_batch,
+    drain_to_parquet,
+    new_run_dir,
+    replay_stream,
+    stage_mod_slices,
+)
 
 
 @register(
@@ -49,7 +56,7 @@ from spark_stream_kudu_spark.streaming.workdir import new_run_dir, stage_mod_sli
     "END-TO-END streaming drift monitor: events replayed as 4 parquet "
     "micro-batches; each batch reduces to (event_type, period, bin) count "
     "partials — the same canonical tagging expression as batch q125 — that "
-    "an AdditiveRollupSink SUM-merges into the keyed store; PSI finalizes "
+    "a sum-combining sink SUM-merges into the keyed store; PSI finalizes "
     "at read time over the stored grid with the batch query's own finalize "
     "code. Counts are additive and the replay marker makes the merge "
     "idempotent, so the result is batch-slicing-independent and equals the "
@@ -58,21 +65,19 @@ from spark_stream_kudu_spark.streaming.workdir import new_run_dir, stage_mod_sli
     oracle=_PSI_ORACLE,
 )
 def stream_psi_drift_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spark_stream_kudu_spark.streaming.sinks import AdditiveRollupSink
-
     tune_session(spark)
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "event_type", "value")
     base = new_run_dir("psi")
     # 4 hash-split replay files = 4 micro-batches
-    # (maxFilesPerTrigger=1), staged via the canonical helper:
+    # (one file per trigger), staged via the canonical helper:
     # additive counts must not care which batch a row lands in, and
     # this slicing exercises exactly that.
     src = stage_mod_slices(ev, base, "event_id")
 
-    sink = AdditiveRollupSink(
+    sink = UpsertParquetSink(
         os.path.join(base, "counts"),
         key=["event_type", "period", "bin"],
-        sum_cols=["c"],
+        combine={"c": F.sum},
     )
 
     def per_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -83,18 +88,7 @@ def stream_psi_drift_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         sink(partial, batch_id)
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_foreach_batch(replay_stream(spark, ev.schema, src), base, per_batch)
     counts = sink.read(spark).select("event_type", "period", "bin", "c")
     return psi_from_counts(counts)
 
@@ -109,7 +103,7 @@ def stream_psi_drift_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     "streaming",
     "END-TO-END streaming Kolmogorov-Smirnov monitor: each micro-batch "
     "reduces to (event_type, cents, a, b) tag-count partials that the "
-    "AdditiveRollupSink SUM-merges into the keyed store — exactly the "
+    "sum-combining sink SUM-merges into the keyed store — exactly the "
     "'pre-aggregate to (type, cents, tag counts) first' scale path the "
     "batch q127 docstring prescribes — and the RANGE-frame ECDF finalize "
     "runs at read time over the stored value histogram instead of raw "
@@ -122,23 +116,21 @@ def stream_psi_drift_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=_KS_ORACLE,
 )
 def stream_ks_drift_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spark_stream_kudu_spark.streaming.sinks import AdditiveRollupSink
-
     tune_session(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
     )
     base = new_run_dir("ks")
     # 4 hash-split replay files = 4 micro-batches
-    # (maxFilesPerTrigger=1), staged via the canonical helper:
+    # (one file per trigger), staged via the canonical helper:
     # additive counts must not care which batch a row lands in, and
     # this slicing exercises exactly that.
     src = stage_mod_slices(ev, base, "event_id")
 
-    sink = AdditiveRollupSink(
+    sink = UpsertParquetSink(
         os.path.join(base, "counts"),
         key=["event_type", "cents"],
-        sum_cols=["a", "b"],
+        combine={"a": F.sum, "b": F.sum},
     )
 
     def per_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -149,18 +141,7 @@ def stream_ks_drift_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         sink(partial, batch_id)
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_foreach_batch(replay_stream(spark, ev.schema, src), base, per_batch)
     counts = sink.read(spark).select("event_type", "cents", "a", "b")
     return ks_from_value_counts(counts)
 
@@ -182,19 +163,19 @@ def stream_ks_drift_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=_CHISQ_ORACLE,
 )
 def stream_chisq_drift_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spark_stream_kudu_spark.streaming.sinks import AdditiveRollupSink
-
     tune_session(spark)
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "event_type")
     base = new_run_dir("chs")
     # 4 hash-split replay files = 4 micro-batches
-    # (maxFilesPerTrigger=1), staged via the canonical helper:
+    # (one file per trigger), staged via the canonical helper:
     # additive counts must not care which batch a row lands in, and
     # this slicing exercises exactly that.
     src = stage_mod_slices(ev, base, "event_id")
 
-    sink = AdditiveRollupSink(
-        os.path.join(base, "counts"), key=["event_type"], sum_cols=["ca", "cb"]
+    sink = UpsertParquetSink(
+        os.path.join(base, "counts"),
+        key=["event_type"],
+        combine={"ca": F.sum, "cb": F.sum},
     )
     split = F.lit(_DRIFT_SPLIT).cast("timestamp")
 
@@ -205,18 +186,7 @@ def stream_chisq_drift_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         sink(partial, batch_id)
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_foreach_batch(replay_stream(spark, ev.schema, src), base, per_batch)
     return chisq_from_counts(sink.read(spark).select("event_type", "ca", "cb"))
 
 
@@ -329,22 +299,9 @@ def stream_holt_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = stage_time_split_batches(
         ev, base, ["2024-01-08", "2024-01-15", "2024-01-22"]
     )
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
+    stream = replay_stream(spark, ev.schema, src)
     folded = holt_stateful(stream)
-    out = os.path.join(base, "out")
-    q = (
-        folded.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    out = drain_to_parquet(folded, base)
     rows = spark.read.parquet(out)
     w = Window.partitionBy("event_type").orderBy(F.desc("n_obs"))
     final = rows.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") == 1)

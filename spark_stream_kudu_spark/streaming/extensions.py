@@ -15,7 +15,8 @@ deterministic and therefore DuckDB-oracle-checkable:
 
 - ``stream_rollup_incremental_e2e`` — an incrementally-maintained
   minute rollup: per-batch partial aggregates SUM-merged into a keyed
-  store (AdditiveRollupSink), the streaming continuous-aggregate
+  store (``UpsertParquetSink`` with a sum ``combine``), the streaming
+  continuous-aggregate
   pattern; the final table equals the one-shot batch rollup.
 
 The join/dedup helpers previously had only pytest evidence; registering
@@ -35,31 +36,21 @@ from spark_stream_kudu_spark.functions.lineage import pin as _pin
 from spark_stream_kudu_spark.functions.rounding import idiv
 from spark_stream_kudu_spark.sources.tables import load_table
 from spark_stream_kudu_spark.streaming.joins import interval_join
+from spark_stream_kudu_spark.streaming.sinks import UpsertParquetSink
 from spark_stream_kudu_spark.streaming.stateful import dedup_within_watermark
-from spark_stream_kudu_spark.streaming.workdir import new_run_dir, stage_mod_slices
+from spark_stream_kudu_spark.streaming.workdir import (
+    drain_foreach_batch,
+    drain_to_parquet,
+    new_run_dir,
+    replay_stream,
+    stage_mod_slices,
+)
 
 
 
 def _ev(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune_session(spark)
     return load_table(spark, sf_dir, "events")
-
-
-def _run_to_parquet(stream_df: DataFrame, base: str) -> str:
-    """Drive a streaming DataFrame to a parquet append sink until all
-    available input is consumed; returns the output path."""
-    out = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    q = (
-        stream_df.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return out
 
 
 _INTERVAL_JOIN_ORACLE = """
@@ -114,7 +105,7 @@ def stream_interval_join_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         p_stream, v_stream, key="user_id", left_ts="p_ts", right_ts="v_ts",
         horizon_sec=3600,
     )
-    out = _run_to_parquet(joined, base)
+    out = drain_to_parquet(joined, base)
     res = spark.read.parquet(out)
     return res.select(
         "purchase_id",
@@ -151,7 +142,7 @@ def stream_watermark_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = spark.readStream.schema(ev.schema).parquet(src)
     deduped = dedup_within_watermark(stream, horizon="10 minutes")
-    out = _run_to_parquet(deduped, base)
+    out = drain_to_parquet(deduped, base)
     return spark.read.parquet(out).select(
         "user_id", "event_id", F.unix_millis("ts").alias("ts_ms"), "event_type"
     )
@@ -233,11 +224,7 @@ def stream_session_window_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage(ev, "batch_0", 1_000_000.0)
     stage(sentinel, "batch_1", 1_000_100.0)
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
+    stream = replay_stream(spark, ev.schema, src)
     sessions = (
         stream.withWatermark("ts", "1 second")
         .groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
@@ -252,7 +239,7 @@ def stream_session_window_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    out = _run_to_parquet(sessions, base)
+    out = drain_to_parquet(sessions, base)
     return spark.read.parquet(out).filter(F.col("user_id") >= 0)
 
 
@@ -278,7 +265,7 @@ GROUP BY 1, 2
     "END-TO-END incrementally-maintained minute rollup (the streaming form "
     "of the q59 continuous-aggregate pattern): events replayed as 4 parquet "
     "micro-batches; each batch aggregates to (minute-bucket, event_type) "
-    "partials that an AdditiveRollupSink SUM-merges into the keyed store — "
+    "partials that a sum-combining sink SUM-merges into the keyed store — "
     "additive merge is commutative/associative, so the final table is "
     "batch-boundary-independent and equals the one-shot batch rollup the "
     "oracle computes. Idempotent-replay marker prevents double-counting; "
@@ -287,19 +274,16 @@ GROUP BY 1, 2
     oracle=_ROLLUP_ORACLE,
 )
 def stream_rollup_incremental_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-
-    from spark_stream_kudu_spark.streaming.sinks import AdditiveRollupSink
-
     ev = _ev(spark, sf_dir).select("event_id", "ts", "event_type", "value")
     base = new_run_dir("roll")
-    # 4 replay files = 4 micro-batches (maxFilesPerTrigger=1), all
+    # 4 replay files = 4 micro-batches (one file per trigger), all
     # staged executor-side in ONE scan (no driver collect).
     src = stage_mod_slices(ev, base, "event_id")
 
-    sink = AdditiveRollupSink(
+    sink = UpsertParquetSink(
         os.path.join(base, "rollup"),
         key=["bucket_ms", "event_type"],
-        sum_cols=["n_events", "value_e4"],
+        combine={"n_events": F.sum, "value_e4": F.sum},
     )
 
     def per_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -314,18 +298,7 @@ def stream_rollup_incremental_e2e(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         sink(partial, batch_id)
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_foreach_batch(replay_stream(spark, ev.schema, src), base, per_batch)
     return sink.read(spark).select("bucket_ms", "event_type", "n_events", "value_e4")
 
 
@@ -393,7 +366,7 @@ def stream_enrich_static_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         "value",
     )
-    out = _run_to_parquet(enriched, base)
+    out = drain_to_parquet(enriched, base)
     return spark.read.parquet(out).select(
         "event_id",
         "user_id",
@@ -421,7 +394,7 @@ def _trend_oracle() -> str:
     "streaming",
     "END-TO-END streaming trending leaderboard: events replayed as 4 "
     "micro-batches; each batch counts (hourly-bucket, event_type) "
-    "partials that an AdditiveRollupSink SUM-merges (commutative, so the "
+    "partials that a sum-combining sink SUM-merges (commutative, so the "
     "store is batch-boundary-independent), and the top-3 rank runs at "
     "READ time over the |windows| x |types| rollup — never over raw "
     "events. The streaming twin of q84_trending, value-equal to its "
@@ -431,20 +404,18 @@ def _trend_oracle() -> str:
     oracle=_trend_oracle(),
 )
 def stream_trending_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-
     from pyspark.sql import Window
 
     from spark_stream_kudu_spark.operators.analytics import _TREND_K
-    from spark_stream_kudu_spark.streaming.sinks import AdditiveRollupSink
 
     ev = _ev(spark, sf_dir).select("event_id", "ts", "event_type")
     base = new_run_dir("trend")
     src = stage_mod_slices(ev, base, "event_id")
 
-    sink = AdditiveRollupSink(
+    sink = UpsertParquetSink(
         os.path.join(base, "counts"),
         key=["bucket_ms", "event_type"],
-        sum_cols=["n_events"],
+        combine={"n_events": F.sum},
     )
 
     def per_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -454,18 +425,7 @@ def stream_trending_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).agg(F.count(F.lit(1)).alias("n_events"))
         sink(partial, batch_id)
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_foreach_batch(replay_stream(spark, ev.schema, src), base, per_batch)
 
     counts = sink.read(spark).select("bucket_ms", "event_type", "n_events")
     w = Window.partitionBy("bucket_ms").orderBy(
@@ -555,7 +515,7 @@ def stream_outer_interval_join_e2e(spark: SparkSession, sf_dir: str) -> DataFram
         p_stream, v_stream, key="user_id", left_ts="p_ts", right_ts="v_ts",
         horizon_sec=3600,
     )
-    out = _run_to_parquet(joined, base)
+    out = drain_to_parquet(joined, base)
     return (
         spark.read.parquet(out)
         .filter(F.col("user_id") >= 0)
@@ -663,7 +623,7 @@ def stream_full_outer_interval_join_e2e(
         p_stream, v_stream, key="user_id", left_ts="p_ts", right_ts="v_ts",
         horizon_sec=3600,
     )
-    out = _run_to_parquet(joined, base)
+    out = drain_to_parquet(joined, base)
     return (
         spark.read.parquet(out)
         .filter(F.col("user_id") >= 0)
@@ -705,7 +665,6 @@ def _media_decode_oracle() -> str:
 )
 def stream_media_decode_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_stream_kudu_spark.operators.multimodal import ppm_decode_features
-    from spark_stream_kudu_spark.streaming.sinks import UpsertParquetSink
 
     tune_session(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -725,18 +684,7 @@ def stream_media_decode_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (guide section 4).
         sink(ppm_decode_features(batch_df).localCheckpoint(eager=False), batch_id)
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_foreach_batch(replay_stream(spark, docs.schema, src), base, per_batch)
     return sink.read(spark).select(
         "doc_id", "width", "height", "n_px", "r_sum", "g_sum", "b_sum"
     )
@@ -780,18 +728,16 @@ GROUP BY event_type
     oracle=_stream_digest_oracle(),
 )
 def stream_digest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-
     from spark_stream_kudu_spark.functions.hashing import md5_int32
-    from spark_stream_kudu_spark.streaming.sinks import AdditiveRollupSink
 
     ev = _ev(spark, sf_dir).select("event_id", "user_id", "event_type", "ts", "value")
     base = new_run_dir("dig")
     src = stage_mod_slices(ev, base, "event_id")
 
-    sink = AdditiveRollupSink(
+    sink = UpsertParquetSink(
         os.path.join(base, "digest"),
         key=["event_type"],
-        sum_cols=["n_rows", "digest_sum"],
+        combine={"n_rows": F.sum, "digest_sum": F.sum},
     )
 
     row = F.concat_ws(
@@ -810,18 +756,7 @@ def stream_digest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         sink(partial, batch_id)
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_foreach_batch(replay_stream(spark, ev.schema, src), base, per_batch)
     return sink.read(spark).select(
         "event_type",
         "n_rows",
@@ -937,18 +872,7 @@ def stream_ann_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(out)
         )
 
-    stream = (
-        spark.readStream.schema(queries.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(q_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_foreach_batch(replay_stream(spark, queries.schema, q_dir), base, per_batch)
     return spark.read.parquet(out).select("qid", "neighbor_id", "adc_d2", "rank")
 
 
@@ -1029,11 +953,7 @@ def stream_late_audit_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage(ev.filter(is_late), "batch_3", 1_000_300.0)
     stage(sentinel, "batch_4", 1_000_400.0)
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
+    stream = replay_stream(spark, ev.schema, src)
     daily = (
         stream.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
@@ -1044,7 +964,7 @@ def stream_late_audit_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    out = _run_to_parquet(daily, base)
+    out = drain_to_parquet(daily, base)
     return spark.read.parquet(out).filter(
         F.col("day_ms") < F.unix_millis(F.to_timestamp(F.lit("2029-12-31")))
     )
@@ -1055,7 +975,7 @@ def stream_late_audit_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     "streaming",
     "END-TO-END streaming cardinality without identities: each "
     "micro-batch reduces to ONE HLL sketch per event_type "
-    "(hll_sketch_agg of user_id) and a SketchUnionSink register-max-"
+    "(hll_sketch_agg of user_id) and an hll_union-combining sink register-max-"
     "merges it into the keyed store. Union is commutative, associative "
     "AND idempotent, so the final estimate is bit-identical to the "
     "one-shot batch sketch for ANY batch slicing (pinned exactly by "
@@ -1093,14 +1013,14 @@ def run_stream_hll(spark: SparkSession, sf_dir: str):
     Split out so the bit-equality invariant test can read the raw
     merged sketches (the registered query finalizes to exact-anchor +
     flag columns for the oracle gate)."""
-    from spark_stream_kudu_spark.streaming.sinks import SketchUnionSink
-
     ev = _ev(spark, sf_dir).select("event_id", "event_type", "user_id")
     base = new_run_dir("hll")
     src = stage_mod_slices(ev, base, "event_id")
 
-    sink = SketchUnionSink(
-        os.path.join(base, "sketches"), key="event_type", sketch_col="sk"
+    sink = UpsertParquetSink(
+        os.path.join(base, "sketches"),
+        key="event_type",
+        combine={"sk": F.hll_union_agg},
     )
 
     def per_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -1109,18 +1029,7 @@ def run_stream_hll(spark: SparkSession, sf_dir: str):
         )
         sink(partial, batch_id)
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_foreach_batch(replay_stream(spark, ev.schema, src), base, per_batch)
     store = spark.read.parquet(os.path.join(base, "sketches", "data"))
     return ev, store
 
@@ -1166,7 +1075,6 @@ def stream_topk_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         ss_summarize,
         ss_summary_schema,
     )
-    from spark_stream_kudu_spark.streaming.sinks import UpsertParquetSink
 
     tune_session(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1187,18 +1095,7 @@ def stream_topk_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).mapInPandas(ss_summarize, ss_summary_schema())
         sink(summ, batch_id)
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_foreach_batch(replay_stream(spark, docs.schema, src), base, per_batch)
     store = sink.read(spark).select("item", "est", "err", "pid", "absent_ub")
     all_toks = docs.select(F.explode(tokens(F.col("text"))).alias("item"))
     return ss_finalize_topk(all_toks, ss_merge_bounds(store))
@@ -1220,7 +1117,7 @@ def _hq_oracle() -> str:
     "streaming",
     "END-TO-END streaming percentiles: each micro-batch reduces to "
     "(event_type, bin) counts on the q163 log-linear grid (integer "
-    "boundary arithmetic, no ln()) and an AdditiveRollupSink "
+    "boundary arithmetic, no ln()) and a sum-combining sink "
     "SUM-merges them into the keyed store; the percentile finalize "
     "runs at read time over the stored grid with the batch sketch's "
     "own code. Counts are additive and replay-idempotent, so the "
@@ -1236,17 +1133,16 @@ def stream_quantile_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         hq_exact_anchors,
         hq_quantiles_from_bins,
     )
-    from spark_stream_kudu_spark.streaming.sinks import AdditiveRollupSink
 
     tune_session(spark)
     ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
     base = new_run_dir("hq")
     src = stage_mod_slices(ev, base, "event_id")
 
-    sink = AdditiveRollupSink(
+    sink = UpsertParquetSink(
         os.path.join(base, "bins"),
         key=["event_type", "bin_id", "lo16", "hi16"],
-        sum_cols=["c"],
+        combine={"c": F.sum},
     )
 
     def per_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -1262,18 +1158,7 @@ def stream_quantile_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         sink(partial, batch_id)
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_foreach_batch(replay_stream(spark, ev.schema, src), base, per_batch)
     bins = sink.read(spark).select("event_type", "bin_id", "lo16", "hi16", "c")
     return hq_quantiles_from_bins(bins, hq_exact_anchors(ev))
 
@@ -1295,7 +1180,7 @@ def _cm_oracle() -> str:
     "END-TO-END streaming Count-Min: the corpus replayed as 4 document "
     "micro-batches; each batch's token stream folds through the SAME "
     "Arrow kernel as batch q178 into per-partition d x w grids, reduced "
-    "to one per-batch (r, c) count partial that an AdditiveRollupSink "
+    "to one per-batch (r, c) count partial that a sum-combining sink "
     "SUM-merges into the keyed cell store — cell-wise addition IS the "
     "Count-Min merge, so the stored grid equals the one-shot batch grid "
     "for any batch slicing, and replay is idempotent because the sink "
@@ -1314,15 +1199,14 @@ def stream_countmin_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         cm_grid_schema,
         cm_summarize,
     )
-    from spark_stream_kudu_spark.streaming.sinks import AdditiveRollupSink
 
     tune_session(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     base = new_run_dir("scm")
     src = stage_mod_slices(docs, base, "doc_id")
 
-    sink = AdditiveRollupSink(
-        os.path.join(base, "cells"), key=["r", "c"], sum_cols=["cnt"]
+    sink = UpsertParquetSink(
+        os.path.join(base, "cells"), key=["r", "c"], combine={"cnt": F.sum}
     )
 
     def per_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -1336,18 +1220,7 @@ def stream_countmin_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         sink(partial, batch_id)
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_foreach_batch(replay_stream(spark, docs.schema, src), base, per_batch)
     grid = sink.read(spark).select("r", "c", F.col("cnt").alias("cellsum"))
     all_toks = docs.select(F.explode(tokens(F.col("text"))).alias("item"))
     return cm_finalize_topk(all_toks, grid)
@@ -1390,7 +1263,6 @@ def stream_substring_audit_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         substr_doc_sizes,
         substr_spans,
     )
-    from spark_stream_kudu_spark.streaming.sinks import UpsertParquetSink
 
     tune_session(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1418,18 +1290,7 @@ def stream_substring_audit_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         span_store.commit()
         doc_store.commit()
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_foreach_batch(replay_stream(spark, docs.schema, src), base, per_batch)
     return substr_audit_from_spans(
         span_store.read(spark).select("doc_id", "pos", "gh"),
         doc_store.read(spark).select("doc_id", "n_tokens"),
@@ -1509,7 +1370,6 @@ def stream_incremental_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         SHINGLE_N,
         _minhash_bands,
     )
-    from spark_stream_kudu_spark.streaming.sinks import UpsertParquetSink
 
     tune_session(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1604,18 +1464,7 @@ def stream_incremental_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         pair_store.commit()
         band_store.commit()
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_foreach_batch(replay_stream(spark, docs.schema, src), base, per_batch)
     out = pair_store.read(spark)
     if out is None:
         return spark.createDataFrame(
@@ -1663,7 +1512,6 @@ def stream_skew_audit_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_stream_kudu_spark.operators.profiling import (
         skew_summary_from_counts,
     )
-    from spark_stream_kudu_spark.streaming.sinks import AdditiveRollupSink
     from spark_stream_kudu_spark.streaming.workdir import (
         new_run_dir,
         stage_mod_slices,
@@ -1674,8 +1522,8 @@ def stream_skew_audit_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage_mod_slices(ev, base, "event_id")
     src = os.path.join(base, "src")
 
-    sink = AdditiveRollupSink(
-        os.path.join(base, "counts"), key=["key"], sum_cols=["n"]
+    sink = UpsertParquetSink(
+        os.path.join(base, "counts"), key=["key"], combine={"n": F.sum}
     )
 
     def per_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -1684,18 +1532,7 @@ def stream_skew_audit_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         sink(partial, batch_id)
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_foreach_batch(replay_stream(spark, ev.schema, src), base, per_batch)
     counts = sink.read(spark).select("key", F.col("n").cast("long").alias("n"))
     return skew_summary_from_counts(counts, "user_id")
 
@@ -1729,7 +1566,6 @@ def _stream_contract_oracle() -> str:
 )
 def stream_contract_gate_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_stream_kudu_spark.sources.tables import load_table
-    from spark_stream_kudu_spark.streaming.sinks import AdditiveRollupSink
     from spark_stream_kudu_spark.streaming.workdir import (
         new_run_dir,
         stage_mod_slices,
@@ -1742,10 +1578,10 @@ def stream_contract_gate_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage_mod_slices(o, base, "o_orderkey")
     src = os.path.join(base, "src")
 
-    sink = AdditiveRollupSink(
+    sink = UpsertParquetSink(
         os.path.join(base, "report"),
         key=["rule"],
-        sum_cols=["n_checked", "n_violations"],
+        combine={"n_checked": F.sum, "n_violations": F.sum},
     )
 
     def per_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -1801,18 +1637,7 @@ def stream_contract_gate_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         sink(rules.unionByName(fk), batch_id)
 
-    stream = (
-        spark.readStream.schema(o.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_foreach_batch(replay_stream(spark, o.schema, src), base, per_batch)
     return sink.read(spark).select(
         "rule",
         F.col("n_checked").cast("long").alias("n_checked"),
@@ -1851,7 +1676,6 @@ def _stream_ivm_oracle() -> str:
 def stream_ivm_retraction_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_stream_kudu_spark.functions.hashing import md5_int32
     from spark_stream_kudu_spark.sources.tables import load_table
-    from spark_stream_kudu_spark.streaming.sinks import AdditiveRollupSink
     from spark_stream_kudu_spark.streaming.workdir import (
         new_run_dir,
         stage_mod_slices,
@@ -1883,8 +1707,10 @@ def stream_ivm_retraction_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The store holds DELTAS ONLY (the sink's replay marker rejects
     # out-of-order batch ids, so the MV seed merges at read time
     # instead of being injected as a fake batch).
-    sink = AdditiveRollupSink(
-        os.path.join(run, "deltas"), key=["status"], sum_cols=["dn", "dcents"]
+    sink = UpsertParquetSink(
+        os.path.join(run, "deltas"),
+        key=["status"],
+        combine={"dn": F.sum, "dcents": F.sum},
     )
     mv0 = base.groupBy("status").agg(
         F.count(F.lit(1)).cast("long").alias("dn"),
@@ -1921,18 +1747,7 @@ def stream_ivm_retraction_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         sink(partial, batch_id)
 
-    stream = (
-        spark.readStream.schema(changes.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(run, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_foreach_batch(replay_stream(spark, changes.schema, src), run, per_batch)
     deltas = sink.read(spark).select(
         "status", F.col("dn").cast("long"), F.col("dcents").cast("long")
     )
@@ -1965,7 +1780,7 @@ FROM events GROUP BY event_type
     "END-TO-END streaming EXACT distinct counting: each micro-batch "
     "reduces to (event_type, word, mask) bitmap partials (word = "
     "user_id div 63, mask = OR of single-bit words — q179's kernel) "
-    "and a BitmapOrSink bitwise-OR-merges them into the keyed store. "
+    "and a bit_or-combining sink bitwise-OR-merges them into the keyed store. "
     "OR is commutative, associative AND idempotent, so the final "
     "popcount equals the one-shot batch distinct count for ANY batch "
     "slicing, merge order, or replay — the exact counterpart of "
@@ -1977,31 +1792,21 @@ FROM events GROUP BY event_type
 )
 def stream_bitmap_distinct_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_stream_kudu_spark.operators.sketches import bitmap_words
-    from spark_stream_kudu_spark.streaming.sinks import BitmapOrSink
 
     ev = _ev(spark, sf_dir).select("event_id", "event_type", "user_id")
     base = new_run_dir("bitmap")
     src = stage_mod_slices(ev, base, "event_id")
 
-    sink = BitmapOrSink(
-        os.path.join(base, "words"), key=["event_type", "word"]
+    sink = UpsertParquetSink(
+        os.path.join(base, "words"),
+        key=["event_type", "word"],
+        combine={"mask": F.bit_or},
     )
 
     def per_batch(batch_df: DataFrame, batch_id: int) -> None:
         sink(bitmap_words(batch_df), batch_id)
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_foreach_batch(replay_stream(spark, ev.schema, src), base, per_batch)
     store = spark.read.parquet(os.path.join(base, "words", "data"))
     return store.groupBy("event_type").agg(
         F.sum(F.bit_count("mask")).cast("long").alias("distinct_users")
@@ -2041,7 +1846,6 @@ FROM events
 )
 def stream_global_rowid_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_stream_kudu_spark.operators.layout import two_phase_rowid
-    from spark_stream_kudu_spark.streaming.sinks import UpsertParquetSink
 
     ev = _ev(spark, sf_dir).select("event_id", "ts", "user_id")
     base = new_run_dir("rowid")
@@ -2064,18 +1868,7 @@ def stream_global_rowid_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         sink(ids, batch_id)
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_foreach_batch(replay_stream(spark, ev.schema, src), base, per_batch)
     return spark.read.parquet(os.path.join(base, "ids", "data")).select(
         "event_id", "rowid"
     )
@@ -2097,7 +1890,7 @@ def _seasonal_oracle() -> str:
     "streaming",
     "END-TO-END streaming seasonal decomposition: each micro-batch "
     "reduces to per-day partial counts that SUM-merge into the keyed "
-    "daily store (AdditiveRollupSink — addition IS the daily-rollup "
+    "daily store (a sum-combining sink — addition IS the daily-rollup "
     "merge, so the store equals the one-shot series for any batch "
     "slicing, replay-guarded by the batch marker), and the finalize "
     "runs q183's integer-exact trend/seasonal/residual decomposition "
@@ -2113,14 +1906,13 @@ def stream_seasonal_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_stream_kudu_spark.operators.series import (
         seasonal_decompose_from_daily,
     )
-    from spark_stream_kudu_spark.streaming.sinks import AdditiveRollupSink
 
     ev = _ev(spark, sf_dir).select("event_id", "ts")
     base = new_run_dir("seas")
     src = stage_mod_slices(ev, base, "event_id")
 
-    sink = AdditiveRollupSink(
-        os.path.join(base, "daily"), key="day", sum_cols=["cnt"]
+    sink = UpsertParquetSink(
+        os.path.join(base, "daily"), key="day", combine={"cnt": F.sum}
     )
 
     def per_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -2129,18 +1921,7 @@ def stream_seasonal_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).agg(F.count(F.lit(1)).cast("long").alias("cnt"))
         sink(partial, batch_id)
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_foreach_batch(replay_stream(spark, ev.schema, src), base, per_batch)
     daily = spark.read.parquet(os.path.join(base, "daily", "data")).select(
         "day", F.col("cnt").cast("long").alias("cnt")
     )
@@ -2205,10 +1986,6 @@ def stream_semantic_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         km_assign_dist,
         trained_codebook,
     )
-    from spark_stream_kudu_spark.streaming.sinks import (
-        AdditiveRollupSink,
-        UpsertParquetSink,
-    )
 
     tune_session(spark)
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -2217,8 +1994,8 @@ def stream_semantic_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = stage_mod_slices(emb, base, "vec_id")
 
     member_store = UpsertParquetSink(os.path.join(base, "members"), key=["vec_id"])
-    dom_store = AdditiveRollupSink(
-        os.path.join(base, "doms"), key=["vec_id"], sum_cols=["n_dominators"]
+    dom_store = UpsertParquetSink(
+        os.path.join(base, "doms"), key=["vec_id"], combine={"n_dominators": F.sum}
     )
 
     def _prep(batch_df: DataFrame) -> DataFrame:
@@ -2259,11 +2036,11 @@ def stream_semantic_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         # form paid one extra blocking job per micro-batch.
         new = _prep(batch_df).localCheckpoint(eager=False)
         # The credits partial is handed to the dominator sink UNCUT:
-        # aggregate-merge sinks lazy-cut their input themselves
-        # (sinks.py ``_cut_input`` — the round-11 generalization of the
-        # caller-side cut that first landed here: without it the
-        # empty-batch guard and the store write EACH ran the full
-        # within+cross pair pipeline, 82 -> 75 jobs per query run).
+        # combine sinks lazy-cut their input themselves (sinks.py
+        # ``compute`` — the round-11 generalization of the caller-side
+        # cut that first landed here: without it the empty-batch guard
+        # and the store write EACH ran the full within+cross pair
+        # pipeline, 82 -> 75 jobs per query run).
         # One member-store read per batch (round-11): the credits'
         # ``prev`` and the upsert-merge's ``current`` are the same table
         # version (nothing writes the member store in between), so the
@@ -2293,18 +2070,7 @@ def stream_semantic_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         dom_store.commit()
         member_store.commit()
 
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_foreach_batch(replay_stream(spark, emb.schema, src), base, per_batch)
     from spark_stream_kudu_spark.functions.joins import gated_broadcast
 
     members = member_store.read(spark)
@@ -2446,7 +2212,7 @@ FROM events GROUP BY 1, 2, 3
     "kafka_to_kudu.py:19's startingOffsets picks the initial position), "
     "exercised on the source the sandbox CAN run: events split into "
     f"{_RL_SLICES} mod-slices, the first {_RL_INITIAL} staged and "
-    "streamed with maxFilesPerTrigger=1 (one slice per micro-batch — "
+    "streamed one file per trigger (one slice per micro-batch — "
     "the admission cap), then the REMAINING slices land and the stream "
     "RESTARTS FROM THE SAME CHECKPOINT: the source log must admit only "
     "the unseen files and keep numbering batches where it left off. "
@@ -2512,18 +2278,8 @@ def stream_rate_limit_resume_e2e(
         return per_batch
 
     def run(phase: str) -> None:
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        q = (
-            stream.writeStream.foreachBatch(make_hook(phase))
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        stream = replay_stream(spark, ev.schema, src)
+        drain_foreach_batch(stream, base, make_hook(phase))
 
     run("initial")
     for k in range(_RL_INITIAL, _RL_SLICES):

@@ -10,26 +10,38 @@ last-writer-wins on the primary key ``as_of_time``, safe to re-run.
 This engine reproduces that contract sink-side (Spark's parquet writer
 has no upsert; Kudu's did — SURVEY.md §2.3.4):
 
-- ``merge_by_key``: pure DataFrame-level keyed merge (new rows win) —
-  the unit the oracle checks.
+- ``merge_by_key``: pure DataFrame-level keyed merge — the unit the
+  oracle checks. Last-writer-wins by default (new rows win); with a
+  ``combine`` map each non-key column merges through an aggregate
+  instead (``F.sum`` for additive rollups, ``F.hll_union_agg`` for
+  sketches, ``F.bit_or`` for bitmaps).
 - ``UpsertParquetSink``: a ``foreachBatch`` target maintaining a keyed
   parquet table with hash layout on the key (mirrors the DDL's
-  ``PARTITION BY HASH PARTITIONS 4``, ddl/create_impala_kudu_table.sql:14).
+  ``PARTITION BY HASH PARTITIONS 4``, ddl/create_impala_kudu_table.sql:14)
+  under either merge policy.
 
 Scale note: the merge implementation is merge-on-read-free — it
-rewrites the table per batch, which is right for the reference's
-cardinality (ONE row per 5 s batch; ddl key = second-granular stamp).
-For high-cardinality keyed state at 100 TB you'd swap the store for a
-format with real MERGE (Delta/Iceberg/Hudi or Kudu itself) behind the
-same ``merge_by_key`` semantics; the sink isolates exactly that seam.
+rewrites the whole table per batch, so each batch costs O(store), not
+O(batch). That only suits the reference's parity cardinality (one row
+per 5 s batch). The event-time pipeline keeps one row per window
+forever: after 116 days of 5 s windows the store holds about 2M rows,
+and the rewrite is most of each batch's time. High-cardinality keyed
+state needs a store that rewrites only the buckets a batch touches, or
+a format with real MERGE (Delta/Iceberg/Hudi or Kudu itself), behind
+the same ``merge_by_key`` semantics; this sink is that seam.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Callable
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+#: Hash buckets of the store layout (ddl/create_impala_kudu_table.sql:14,
+#: ``PARTITION BY HASH PARTITIONS 4``).
+NUM_BUCKETS = 4
 
 # One sub-batch marker column used to disambiguate replays.
 _BATCH_COL = "__batch_id"
@@ -44,31 +56,50 @@ def merge_by_key(
     updates: DataFrame,
     key: str | list[str],
     num_buckets: int | None = None,
+    combine: dict[str, Callable[[str], Column]] | None = None,
 ) -> DataFrame:
-    """Last-writer-wins merge of ``updates`` into ``current``.
+    """Keyed merge of ``updates`` into ``current``.
 
-    Row-for-row equivalent to Kudu UPSERT (java:117-119): every key in
-    ``updates`` replaces its row in ``current``; unknown keys insert.
+    ``combine=None`` is last-writer-wins, row-for-row equivalent to Kudu
+    UPSERT (java:117-119): every key in ``updates`` replaces its row in
+    ``current``; unknown keys insert.
     If ``updates`` itself carries duplicate keys, the *last* occurrence
     wins, matching sequential upserts (requires a deterministic order
     column ``__batch_id`` if present, else arbitrary-but-single).
 
-    Shape (round-11): the merge is ONE keyed aggregate — union both
-    sides with a priority tag (current 0, updates 1) and keep, per key,
-    the max of ``struct(priority, non_keys...)``. Row-for-row identical
-    to the previous dedup -> anti-join -> union form: a key only in one
-    side keeps that side's (deduped) row, a key in both keeps the
-    updates row regardless of content, and duplicate update keys
-    resolve to the same lexicographically-largest non-key tuple the
-    dedup pass picked (struct comparison is field-order left-to-right,
-    priority first). One exchange instead of three (updates dedup +
-    anti-join + layout); with ``num_buckets`` set the exchange is
-    issued as ``repartition(num_buckets, keys)`` so the merged output
-    already carries the store's hash layout (same idiom as
-    ``merge_additive``). Requires orderable non-key columns (no maps),
-    which holds for every sink schema here.
+    ``combine`` maps each non-key column to the aggregate that merges
+    it (``{"n": F.sum}``): ``updates`` then carries PARTIAL aggregates
+    per key, and the merge folds them into ``current`` instead of
+    replacing rows — the maintenance step of an incrementally-updated
+    rollup, sketch or bitmap store. With a commutative, associative
+    aggregate the result is independent of micro-batch boundaries.
+    Columns outside ``keys`` and ``combine`` are dropped.
+
+    Shape: either policy is ONE keyed aggregate. Last-writer-wins
+    unions both sides with a priority tag (current 0, updates 1) and
+    keeps, per key, the max of ``struct(priority, non_keys...)``: a key
+    only in one side keeps that side's (deduped) row, a key in both
+    keeps the updates row regardless of content, and duplicate update
+    keys resolve to the lexicographically-largest non-key tuple
+    (struct comparison is field-order left-to-right, priority first).
+    With ``num_buckets`` set the key shuffle is issued as
+    ``repartition(num_buckets, keys)`` before the aggregate — its
+    clustered-distribution requirement is satisfied by that
+    partitioning — so the merged output already carries the store's
+    hash layout and needs no second exchange. Last-writer-wins requires
+    orderable non-key columns (no maps), which holds for every sink
+    schema here.
     """
     keys = [key] if isinstance(key, str) else list(key)
+
+    def _bucketed(df: DataFrame) -> DataFrame:
+        return df if num_buckets is None else df.repartition(num_buckets, *keys)
+
+    if combine is not None:
+        both = updates if current is None else current.unionByName(updates)
+        return _bucketed(both).groupBy(*keys).agg(
+            *[merge(c).alias(c) for c, merge in combine.items()]
+        )
     had_batch_col = _BATCH_COL in updates.columns
     if had_batch_col:
         # Explicit arrival order: keep the row of the LATEST batch per
@@ -91,9 +122,6 @@ def merge_by_key(
         out_cols = updates.columns
     else:
         out_cols = [*keys, *non_keys]
-
-    def _bucketed(df: DataFrame) -> DataFrame:
-        return df if num_buckets is None else df.repartition(num_buckets, *keys)
 
     if not non_keys:
         # Key-only rows: the merge degenerates to a distinct union.
@@ -122,30 +150,30 @@ class UpsertParquetSink:
 
     Usage::
 
-        sink = UpsertParquetSink(path, key="as_of_time", num_buckets=4)
+        sink = UpsertParquetSink(path, key="as_of_time")
         q = (df.writeStream.outputMode("update")
                .foreachBatch(sink).start())
 
+    ``combine`` selects the merge policy (see :func:`merge_by_key`):
+    ``None`` keeps last-writer-wins; a map such as
+    ``{"n_events": F.sum}`` folds each batch's partial aggregates into
+    the stored ones.
+
     Idempotency: the sink records the last committed batch id in the
     table directory; replaying an already-committed batch is a no-op,
-    reproducing the reference's replay-safety (java:113-115).
+    reproducing the reference's replay-safety (java:113-115). For a
+    ``combine`` store this is what keeps a replay from double-counting.
     """
 
-    #: Aggregate-merge subclasses set this True: their batch inputs are
-    #: by construction partial aggregates — a shuffle runs before the
-    #: first output row — so the empty-batch probe would execute the
-    #: aggregation once and the merge would execute it AGAIN (round-11).
-    #: A lazy lineage cut makes the probe the materializer and the merge
-    #: a read-back. The base last-writer-wins sink stays uncut: its
-    #: inputs are often raw or narrow scan-local plans whose limit-1
-    #: probe is cheaper than a full materialization (callers with
-    #: expensive plans cut at the call site instead).
-    _cut_input = False
-
-    def __init__(self, path: str, key: str | list[str], num_buckets: int = 4):
+    def __init__(
+        self,
+        path: str,
+        key: str | list[str],
+        combine: dict[str, Callable[[str], Column]] | None = None,
+    ):
         self.path = path
         self.key = [key] if isinstance(key, str) else list(key)
-        self.num_buckets = num_buckets
+        self.combine = combine
         self._data = os.path.join(path, "data")
         self._marker = os.path.join(path, "_last_batch")
         # Read-back schema, cached after the first inference (round-11):
@@ -164,11 +192,23 @@ class UpsertParquetSink:
         except (FileNotFoundError, ValueError):
             return -1
 
+    def _restore_aside(self) -> None:
+        """Undo a promotion cut short between its two renames: the
+        previous table sits in ``data.old`` and ``data`` is missing.
+        Reading on would see no table and the next commit would delete
+        ``data.old`` — the whole store lost. The replay marker was not
+        advanced, so the interrupted batch replays onto the restored
+        table."""
+        old = self._data + ".old"
+        if not os.path.isdir(self._data) and os.path.isdir(old):
+            os.rename(old, self._data)
+
     def num_rows(self) -> int | None:
         """Exact row count of the live store from its parquet footers
         (driver-side metadata, no Spark job) — None when the store is
         missing. The cheap source for row bounds fed to size-gated
         joins over the store (a ``count()`` would cost a scan job)."""
+        self._restore_aside()
         if not os.path.isdir(self._data):
             return None
         import glob
@@ -181,6 +221,7 @@ class UpsertParquetSink:
         )
 
     def read(self, spark) -> DataFrame | None:
+        self._restore_aside()
         # Only a MISSING table reads as empty. Transient read failures
         # must propagate: swallowing them would make the next merge
         # treat the table as empty and silently drop all upserted state.
@@ -193,18 +234,13 @@ class UpsertParquetSink:
         return df
 
     def _merge(self, current: DataFrame | None, batch_df: DataFrame) -> DataFrame:
-        """Merge policy — last-writer-wins here; subclasses override
-        (AdditiveRollupSink sum-merges partial aggregates)."""
-        return merge_by_key(current, batch_df, self.key, num_buckets=self.num_buckets)
-
-    def _layout(self, merged: DataFrame) -> DataFrame:
-        """Hash layout on the key before the store write. Every merge
-        policy — last-writer-wins included since round-11 — issues its
-        key shuffle as ``repartition(num_buckets, key)`` feeding its
-        aggregate, so the merged output already carries the store's
-        hash layout (reference ddl:14, HASH PARTITIONS 4) and a second
-        exchange here would be redundant."""
-        return merged
+        """Merge this batch into the store. The key shuffle is issued as
+        ``repartition(NUM_BUCKETS, key)`` feeding the merge aggregate, so
+        the merged output already carries the store's hash layout
+        (reference ddl:14, HASH PARTITIONS 4)."""
+        return merge_by_key(
+            current, batch_df, self.key, num_buckets=NUM_BUCKETS, combine=self.combine
+        )
 
     def compute(
         self, batch_df: DataFrame, batch_id: int, current=_READ_STORE
@@ -223,7 +259,16 @@ class UpsertParquetSink:
         number of sinks may compute concurrently (driver thread pool);
         the renames happen afterwards, in :meth:`commit`, when no job
         is in flight."""
-        if self._cut_input:
+        if self.combine is not None:
+            # A combine store's batch inputs are partial aggregates — a
+            # shuffle runs before the first output row — so the
+            # empty-batch probe would execute the aggregation once and
+            # the merge would execute it AGAIN (round-11). A lazy
+            # lineage cut makes the probe the materializer and the
+            # merge a read-back. Last-writer-wins inputs stay uncut:
+            # they are often raw or narrow scan-local plans whose
+            # limit-1 probe is cheaper than a full materialization
+            # (callers with expensive plans cut at the call site).
             batch_df = batch_df.localCheckpoint(eager=False)
         # Empty-batch guard (reference O7, kafka_to_kudu.py:23).
         if batch_df.isEmpty():
@@ -242,12 +287,11 @@ class UpsertParquetSink:
         if current is _READ_STORE:
             current = self.read(spark)
         merged = self._merge(current, batch_df)
-        # Hash layout on the key (reference ddl:14, HASH PARTITIONS 4):
-        # co-locates future merges and bounds file counts. Write to a
-        # side directory then swap — the merge plan reads the current
-        # directory, so an in-place overwrite would corrupt its input.
+        # Write to a side directory then swap — the merge plan reads the
+        # current directory, so an in-place overwrite would corrupt its
+        # input.
         tmp = self._data + ".tmp"
-        self._layout(merged).write.mode("overwrite").parquet(tmp)
+        merged.write.mode("overwrite").parquet(tmp)
         self._staged_batch = batch_id
         return True
 
@@ -266,7 +310,8 @@ class UpsertParquetSink:
         tmp = self._data + ".tmp"
         # Promote via rename-aside: the previous table is moved to .old
         # (not deleted) before tmp takes its place, so a crash anywhere
-        # in the window leaves a recoverable copy instead of no table.
+        # in the window leaves a recoverable copy instead of no table
+        # (restored by ``_restore_aside`` on the next read).
         old = self._data + ".old"
         if os.path.exists(old):
             shutil.rmtree(old)
@@ -276,8 +321,14 @@ class UpsertParquetSink:
         if os.path.exists(old):
             shutil.rmtree(old)
         os.makedirs(self.path, exist_ok=True)
-        with open(self._marker, "w") as f:
+        # Replace the marker atomically: truncating it in place could
+        # leave an empty file after a crash, which reads as -1 and
+        # would re-apply (for a combine store, double-count) a replayed
+        # batch.
+        marker_tmp = self._marker + ".tmp"
+        with open(marker_tmp, "w") as f:
             f.write(str(self._staged_batch))
+        os.replace(marker_tmp, self._marker)
         self._staged_batch = None
 
     def __call__(
@@ -285,136 +336,3 @@ class UpsertParquetSink:
     ) -> None:
         if self.compute(batch_df, batch_id, current):
             self.commit()
-
-
-def merge_additive(
-    current: DataFrame | None,
-    updates: DataFrame,
-    key: str | list[str],
-    sum_cols: list[str],
-    num_buckets: int | None = None,
-) -> DataFrame:
-    """Additive (aggregate-merge) upsert: ``updates`` carries PARTIAL
-    aggregates per key; merging SUMS them into the current table instead
-    of replacing rows — the maintenance step of an incrementally-updated
-    rollup (continuous aggregate). Commutative and associative, so the
-    result is independent of micro-batch boundaries; one shuffle on the
-    key, same as the last-writer-wins merge.
-
-    ``num_buckets`` (round-11): when set, the key shuffle is issued as
-    ``repartition(num_buckets, keys)`` BEFORE the groupBy — the
-    aggregate's clustered-distribution requirement is satisfied by that
-    partitioning (map-side partial aggregation is unchanged), so the
-    merged output already carries the store's hash layout and the sink
-    skips its separate layout exchange (2 exchanges -> 1 per batch)."""
-    keys = [key] if isinstance(key, str) else list(key)
-    both = updates if current is None else current.unionByName(updates)
-    if num_buckets is not None:
-        both = both.repartition(num_buckets, *keys)
-    return both.groupBy(*keys).agg(
-        *[F.sum(c).alias(c) for c in sum_cols]
-    )
-
-
-class AdditiveRollupSink(UpsertParquetSink):
-    """``foreachBatch`` sink maintaining an incrementally-updated rollup
-    table: each micro-batch's partial aggregates are SUM-merged into the
-    keyed store (vs. the base class's last-writer-wins replacement).
-    Inherits the idempotent-replay marker and the crash-safe rename-aside
-    promotion — replaying a committed batch must NOT double-count."""
-
-    _cut_input = True
-
-    def __init__(
-        self,
-        path: str,
-        key: str | list[str],
-        sum_cols: list[str],
-        num_buckets: int = 4,
-    ):
-        super().__init__(path, key, num_buckets)
-        self.sum_cols = list(sum_cols)
-
-    def _merge(self, current: DataFrame | None, batch_df: DataFrame) -> DataFrame:
-        return merge_additive(
-            current, batch_df, self.key, self.sum_cols,
-            num_buckets=self.num_buckets,
-        )
-
-    def _layout(self, merged: DataFrame) -> DataFrame:
-        # The merge's pre-aggregation repartition already produced the
-        # store's hash layout — a second exchange would be redundant.
-        return merged
-
-
-class SketchUnionSink(UpsertParquetSink):
-    """``foreachBatch`` sink maintaining keyed HLL sketches: each
-    micro-batch's partial sketches are hll_union-merged into the store.
-    Register-wise max is commutative, associative AND idempotent, so the
-    final sketch — and therefore its estimate — is bit-identical for any
-    batch slicing or merge order (stronger than the additive sink, which
-    needs the replay marker to avoid double-counting; the marker is
-    still inherited for IO economy). The streaming cardinality path
-    that never stores identities."""
-
-    _cut_input = True
-
-    def __init__(
-        self,
-        path: str,
-        key: str | list[str],
-        sketch_col: str,
-        num_buckets: int = 4,
-    ):
-        super().__init__(path, key, num_buckets)
-        self.sketch_col = sketch_col
-
-    def _merge(self, current, batch_df):
-        if current is None:
-            base = batch_df
-        else:
-            base = current.select(*batch_df.columns).unionByName(batch_df)
-        # Pre-aggregation repartition = aggregation + layout in one
-        # exchange (see merge_additive).
-        return base.repartition(self.num_buckets, *self.key).groupBy(
-            *self.key
-        ).agg(F.hll_union_agg(self.sketch_col).alias(self.sketch_col))
-
-    def _layout(self, merged: DataFrame) -> DataFrame:
-        return merged
-
-
-class BitmapOrSink(UpsertParquetSink):
-    """``foreachBatch`` sink maintaining keyed bitmap words: each
-    micro-batch's (key, word, mask) partials are bitwise-OR-merged into
-    the store. OR is commutative, associative AND idempotent — the same
-    algebra class as SketchUnionSink's register-max, but the merged
-    bitmap is EXACT: popcount over the final words equals the true
-    distinct count for any batch slicing, merge order, or replay. State
-    is |keys| x |id-space/63| words, never raw identities."""
-
-    _cut_input = True
-
-    def __init__(
-        self,
-        path: str,
-        key: str | list[str],
-        mask_col: str = "mask",
-        num_buckets: int = 4,
-    ):
-        super().__init__(path, key, num_buckets)
-        self.mask_col = mask_col
-
-    def _merge(self, current, batch_df):
-        if current is None:
-            base = batch_df
-        else:
-            base = current.select(*batch_df.columns).unionByName(batch_df)
-        # Pre-aggregation repartition = aggregation + layout in one
-        # exchange (see merge_additive).
-        return base.repartition(self.num_buckets, *self.key).groupBy(
-            *self.key
-        ).agg(F.bit_or(self.mask_col).alias(self.mask_col))
-
-    def _layout(self, merged: DataFrame) -> DataFrame:
-        return merged

@@ -35,7 +35,9 @@ from spark_stream_kudu_spark.registry import register
 from spark_stream_kudu_spark.session import tune_session
 from spark_stream_kudu_spark.sources.tables import load_table
 from spark_stream_kudu_spark.streaming.workdir import (
+    drain_to_parquet,
     new_run_dir,
+    replay_stream,
     stage_time_split_batches,
 )
 
@@ -114,22 +116,9 @@ def stream_transitions_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev, base, ["2024-01-08", "2024-01-15", "2024-01-22"]
     )
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
+    stream = replay_stream(spark, ev.schema, src)
     pairs = transitions_stateful(stream)
-    out = os.path.join(base, "out")
-    q = (
-        pairs.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    out = drain_to_parquet(pairs, base)
     return (
         spark.read.parquet(out)
         .groupBy("prev_type", "next_type")
@@ -163,38 +152,23 @@ def stream_transitions_restart_e2e(spark: SparkSession, sf_dir: str) -> DataFram
     )
     base = new_run_dir("trnr")
     src = os.path.join(base, "src")
-    out = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-
     bounds = ["2024-01-08", "2024-01-15", "2024-01-22", None]
 
     def stage(k: int) -> None:
         lo = bounds[k - 1] if k > 0 else None
         stage_one_slice(time_slice(ev, lo, bounds[k]), base, k)
 
-    def run_once() -> None:
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
+    def run_once() -> str:
+        return drain_to_parquet(
+            transitions_stateful(replay_stream(spark, ev.schema, src)), base
         )
-        q = (
-            transitions_stateful(stream)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
 
     stage(0)
     stage(1)
     run_once()  # weeks 1-2, then the query STOPS
     stage(2)
     stage(3)
-    run_once()  # NEW query, same checkpoint: state must be reloaded
+    out = run_once()  # NEW query, same checkpoint: state must be reloaded
     return (
         spark.read.parquet(out)
         .groupBy("prev_type", "next_type")

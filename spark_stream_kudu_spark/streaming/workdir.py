@@ -1,4 +1,4 @@
-"""Scratch-dir management for file-replay streaming queries.
+"""Run directories and the file-replay convention for streaming queries.
 
 The end-to-end streaming queries (stream_traffic_pipeline, the
 streaming/extensions.py runs) each stage replay files, a checkpoint,
@@ -7,6 +7,13 @@ independent, so old directories are garbage; this module hands out run
 dirs and reaps siblings older than an hour (long past the point their
 lazily-read result DataFrames were consumed) so repeated correctness /
 test runs don't grow the repo without bound.
+
+The replay convention lives here too: staging helpers write ``base/src``
+as one parquet file per micro-batch with ascending mtimes,
+:func:`replay_stream` reads it back one file per trigger, and
+:func:`drain_to_parquet` / :func:`drain_foreach_batch` run a stream on
+the ``availableNow`` trigger until the staged input is consumed, with
+the checkpoint at ``base/ckpt``.
 """
 
 from __future__ import annotations
@@ -74,24 +81,16 @@ def stage_time_split_batches(df, base: str, bounds: list[str], ts_col: str = "ts
     Splits on the timestamp ``bounds`` (half-open ranges), writes each
     slice as ONE parquet file under ``base/src``, and stamps ascending
     mtimes so the file source (which orders batches by modification
-    time) replays them oldest-first with ``maxFilesPerTrigger=1``.
+    time) replays them oldest-first through :func:`replay_stream`.
     Per-key arrival order then matches event-time order across batches —
     the property the stateful e2e queries (anomaly, transitions) rely on
     for oracle parity with their batch window twins.
 
-    Returns the source directory to pass to ``spark.readStream``.
+    Returns the source directory to pass to :func:`replay_stream`.
     """
-    from pyspark.sql import functions as F
-
-    src = os.path.join(base, "src")
     lo = None
     for k, hi in enumerate([*bounds, None]):
-        part_df = df
-        if lo is not None:
-            part_df = part_df.filter(F.col(ts_col) >= F.lit(lo).cast("timestamp"))
-        if hi is not None:
-            part_df = part_df.filter(F.col(ts_col) < F.lit(hi).cast("timestamp"))
-        src = stage_one_slice(part_df, base, k)
+        src = stage_one_slice(time_slice(df, lo, hi, ts_col), base, k)
         lo = hi
     return src
 
@@ -161,3 +160,44 @@ def stage_mod_slices(df, base: str, key_col: str, n: int = 4) -> str:
             )
         os.utime(dest, (1_000_000.0 + 100 * k,) * 2)
     return src
+
+
+def replay_stream(spark, schema, src: str):
+    """File-replay source: ``src`` read one parquet file per trigger, so
+    each staged file is one micro-batch, admitted in mtime order."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+    )
+
+
+def _drain(writer, base: str) -> None:
+    q = (
+        writer.option("checkpointLocation", os.path.join(base, "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+
+def drain_to_parquet(stream_df, base: str) -> str:
+    """Drive ``stream_df`` to a parquet append sink at ``base/out`` until
+    all available input is consumed; returns the output path. Running it
+    again on the same ``base`` resumes from the checkpoint."""
+    out = os.path.join(base, "out")
+    writer = (
+        stream_df.writeStream.format("parquet")
+        .option("path", out)
+        .outputMode("append")
+    )
+    _drain(writer, base)
+    return out
+
+
+def drain_foreach_batch(stream_df, base: str, per_batch) -> None:
+    """Drive ``stream_df`` through the ``foreachBatch`` callback
+    ``per_batch(batch_df, batch_id)`` until all available input is
+    consumed. Running it again on the same ``base`` resumes from the
+    checkpoint."""
+    _drain(stream_df.writeStream.foreachBatch(per_batch), base)

@@ -53,7 +53,7 @@ def test_read_corrupt_table_raises(spark, tmp_path):
 
 
 def test_upsert_promotion_leaves_no_stale_dirs(spark, tmp_path):
-    sink = UpsertParquetSink(str(tmp_path / "t"), key="k", num_buckets=2)
+    sink = UpsertParquetSink(str(tmp_path / "t"), key="k")
     b1 = spark.createDataFrame([(1, "x"), (2, "y")], "k int, v string")
     b2 = spark.createDataFrame([(2, "y2"), (3, "z")], "k int, v string")
     sink(b1, batch_id=0)
@@ -62,6 +62,25 @@ def test_upsert_promotion_leaves_no_stale_dirs(spark, tmp_path):
     assert table == {1: "x", 2: "y2", 3: "z"}
     # neither the .tmp nor the .old staging dir survives a clean batch
     assert not os.path.exists(sink._data + ".tmp")
+    assert not os.path.exists(sink._data + ".old")
+
+
+def test_commit_crash_between_renames_keeps_store(spark, tmp_path):
+    """A driver that dies after moving the live table to ``data.old``
+    but before promoting ``data.tmp`` leaves the store only in
+    ``data.old``. The replayed batch must merge onto that table, not
+    onto an empty store whose commit then deletes ``data.old``."""
+    path = str(tmp_path / "t")
+    sink = UpsertParquetSink(path, key="k")
+    b0 = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "k int, v string")
+    b1 = spark.createDataFrame([(4, "d")], "k int, v string")
+    sink(b0, batch_id=0)
+    assert sink.compute(b1, batch_id=1)
+    os.rename(sink._data, sink._data + ".old")  # crash: data.tmp never promoted
+    restarted = UpsertParquetSink(path, key="k")
+    restarted(b1, batch_id=1)  # the marker still reads 0, so batch 1 replays
+    table = {r["k"]: r["v"] for r in restarted.read(spark).collect()}
+    assert table == {1: "a", 2: "b", 3: "c", 4: "d"}
     assert not os.path.exists(sink._data + ".old")
 
 
@@ -150,20 +169,42 @@ def test_repetition_mode_fold_linear_on_long_doc(spark):
     assert elapsed < 60, f"mode fold took {elapsed:.0f}s — not linear"
 
 
-def test_additive_rollup_replay_does_not_double_count(spark, tmp_path):
-    from spark_stream_kudu_spark.streaming.sinks import AdditiveRollupSink
+# merge policy -> (the batch's partial aggregate of x per key, the
+# read-back of the merged column v, the expected read-back per key).
+_COMBINE_CASES = {
+    "sum": (F.sum, "sum(x)", "v", {1: 13, 2: 5, 3: 7}),
+    "hll_union_agg": (
+        F.hll_union_agg,
+        "hll_sketch_agg(x)",
+        "hll_sketch_estimate(v)",
+        {1: 2, 2: 1, 3: 1},
+    ),
+    "bit_or": (
+        F.bit_or,
+        "bit_or(shiftleft(1L, x))",
+        "bit_count(v)",
+        {1: 2, 2: 1, 3: 1},
+    ),
+}
 
-    sink = AdditiveRollupSink(
-        str(tmp_path / "roll"), key="k", sum_cols=["n"], num_buckets=2
-    )
-    b0 = spark.createDataFrame([(1, 10), (2, 5)], "k int, n long")
-    b1 = spark.createDataFrame([(1, 3), (3, 7)], "k int, n long")
+
+@pytest.mark.parametrize("policy", sorted(_COMBINE_CASES))
+def test_combine_replay_does_not_double_count(spark, tmp_path, policy):
+    merge, partial, read_back, expected = _COMBINE_CASES[policy]
+    sink = UpsertParquetSink(str(tmp_path / "roll"), key="k", combine={"v": merge})
+
+    def batch(rows):
+        raw = spark.createDataFrame(rows, "k int, x long")
+        return raw.groupBy("k").agg(F.expr(partial).alias("v"))
+
+    b0 = batch([(1, 10), (2, 5)])
+    b1 = batch([(1, 3), (3, 7)])
     sink(b0, batch_id=0)
     sink(b1, batch_id=1)
     sink(b1, batch_id=1)  # replay: must be a no-op
     sink(b0, batch_id=0)  # stale replay: must be a no-op
-    table = {r["k"]: r["n"] for r in sink.read(spark).collect()}
-    assert table == {1: 13, 2: 5, 3: 7}
+    rows = sink.read(spark).select("k", F.expr(read_back).alias("v")).collect()
+    assert {r["k"]: r["v"] for r in rows} == expected
 
 
 def test_spread_small_scan_is_conditional(spark):
